@@ -257,9 +257,20 @@ def class_dim(spark: SparkSession) -> DataFrame:
     """The 8-row object-class dimension (reference: CONSTANTS.py:4-13).
 
     Used via broadcast join (J2) instead of the reference's per-row dict
-    ``apply`` (street_level_grouping.py:91).
+    ``apply`` (street_level_grouping.py:91). Built in the JVM (``inline``
+    over literal structs on a one-row range): ``createDataFrame`` of a
+    Python list is an RDD scan that starts Python workers on every use.
     """
-    return spark.createDataFrame(schemas.CLASS_DIM_ROWS, schema=schemas.CLASS_DIM)
+    from pyspark.sql import functions as F
+
+    rows = F.array(
+        *(
+            F.struct(*(F.lit(v).cast(f.dataType).alias(f.name)
+                       for v, f in zip(row, schemas.CLASS_DIM.fields)))
+            for row in schemas.CLASS_DIM_ROWS
+        )
+    )
+    return spark.range(1).select(F.inline(rows))
 
 
 def write_warehouse_table(

@@ -11,7 +11,10 @@ durable as Parquet between runs.
 
 Each materialization also records the Dagster-style output metadata
 (schema + row count — the ``add_output_metadata`` analogue,
-street_level_grouping.py:92-95) into ``ctx.reports``.
+street_level_grouping.py:92-95) into ``ctx.reports``. The row count comes
+from an ``Observation`` on the DataFrame being written, filled by the write
+job itself; the landed table is re-read with the written schema, so
+reporting costs no Spark job (no ``count()``, no Parquet footer inference).
 
 Scale posture: a stage's ``partition_by`` routes through
 ``write_warehouse_table`` so facts land partitioned (pruning for every
@@ -26,7 +29,9 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .io import write_warehouse_table
 
@@ -75,12 +80,18 @@ class Pipeline:
             df = stage.fn(spark, ctx)
             ctx.tables[stage.name] = df
             if stage.materialize:
+                written = Observation()
                 path = write_warehouse_table(
-                    df, warehouse_dir, stage.name, partition_by=stage.partition_by
+                    df.observe(written, F.count(F.lit(1)).alias("rows")),
+                    warehouse_dir,
+                    stage.name,
+                    partition_by=stage.partition_by,
                 )
                 # Re-read the landed table: downstream stages scan Parquet
                 # (pruning/pushdown apply) instead of recomputing the plan.
-                landed = spark.read.parquet(path)
+                landed = spark.read.schema(
+                    _landed_schema(df.schema, stage.partition_by)
+                ).parquet(path)
                 if stage.parallel_reread:
                     from .io import dir_scan_parallelism
 
@@ -89,9 +100,21 @@ class Pipeline:
                 ctx.reports[stage.name] = {
                     "path": path,
                     "schema": landed.schema.simpleString(),
-                    "rows": landed.count(),
+                    "rows": written.get["rows"],
                 }
         return ctx
+
+
+def _landed_schema(
+    written: T.StructType, partition_by: list[str] | None
+) -> T.StructType:
+    """The schema a Parquet read infers for a table written with
+    ``written``: partition columns move to the end, as directory values."""
+    parts = list(partition_by or ())
+    return T.StructType(
+        [f for f in written.fields if f.name not in parts]
+        + [written[name] for name in parts]
+    )
 
 
 _PIPELINES: dict[str, Pipeline] = {}

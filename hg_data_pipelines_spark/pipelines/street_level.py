@@ -14,24 +14,34 @@ Spark-first translation:
   ``obj_idx`` (original row order) is the tiebreak that reproduces pandas'
   first-max semantics.
 - the pose lookup loop (J1) is a broadcast equi-join on the file stem.
-- pixel→ray math (U1) runs vectorized per polygon inside applyInPandas.
+- pixel→ray math (U1) is Spark column expressions in the JVM: the ring is
+  parsed with ``from_json``, closed and strided, and each point goes through
+  the per-row rotation R = Rz·Ry·Rx with ``transform`` — no Python worker,
+  no shuffle beyond the window's.
 - ray↔mesh intersection (U6) broadcasts the triangle soup and processes rays
   partition-parallel via mapInPandas — the reference's single
   ``multi_ray_trace`` call becomes one batched Möller–Trumbore kernel per
   Arrow batch.
 
-Scale: one shuffle per stage boundary (groupBy file_name); the mesh is a
-broadcast variable (≤ executor memory; tile the mesh spatially beyond that);
-joblib's loky pool (reference :191-192) is replaced by Spark tasks.
+Width: the two Python stages (IoU grouping, mesh intersection) run at a
+fixed width of ``spark.sql.shuffle.partitions`` tasks. Each is fed from an
+explicit-count exchange (hash on file_name for grouping, round-robin for the
+mesh), which AQE leaves alone, and ends in a ``rebalance`` hint, which AQE
+sizes — so the geometry uses every core while a small landed table stays
+one file.
+
+Scale: the mesh is a broadcast variable (≤ executor memory; tile the mesh
+spatially beyond that); joblib's loky pool (reference :191-192) is replaced
+by Spark tasks.
 """
 
 from __future__ import annotations
 
-import json
+import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -61,6 +71,12 @@ _GROUPED_SCHEMA = T.StructType(
 )
 
 
+def _python_width(df: DataFrame) -> int:
+    """Task count for a Python stage (module docstring, "Width"): AQE
+    would coalesce a KB-sized input's shuffle to one Python task."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
 def _group_one_photo(pdf: pd.DataFrame) -> pd.DataFrame:
     # Stable input order = original JSON order (obj_idx), the determinism
     # contract for the greedy algorithm (SURVEY.md §7.2).
@@ -82,8 +98,10 @@ def grouped_detected_objects(detected: DataFrame) -> DataFrame:
     cols = [f.name for f in _GROUPED_SCHEMA.fields if f.name != "group_idx"]
     return (
         detected.select(*cols)
+        .repartition(_python_width(detected), "file_name")
         .groupBy("file_name")
         .applyInPandas(_group_one_photo, _GROUPED_SCHEMA)
+        .hint("rebalance")
     )
 
 
@@ -124,45 +142,85 @@ _BEST_LINES_SCHEMA = T.StructType(
 )
 
 
-def _rays_one_photo(pdf: pd.DataFrame) -> pd.DataFrame:
-    out_rows = []
-    for _, row in pdf.iterrows():
-        ring = [list(p) for p in json.loads(row["polygon_json"])[0]]
-        # shapely's Polygon closes an open ring; exterior.coords includes the
-        # closing point (reference :158-166 iterates the closed ring).
-        if ring[0] != ring[-1]:
-            ring.append(ring[0])
-        pts = ring[::POLYGON_SPACING]
-        px = np.array([int(p[0]) for p in pts], dtype=np.float64)
-        py = np.array([int(p[1]) for p in pts], dtype=np.float64)
-        origin = np.array(
-            [row["proj_x"], row["proj_y"], row["proj_z"]], dtype=np.float64
+_RINGS = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
+
+
+def _sampled_ring(polygon_json: Column) -> Column:
+    """Exterior ring → every POLYGON_SPACING-th point of the closed ring.
+
+    shapely's Polygon closes an open ring and exterior.coords includes the
+    closing point (reference :158-166 iterates the closed ring). An empty
+    ring stays empty: ``get`` is NULL out of bounds where ``ring[0]`` would
+    raise under ANSI mode.
+    """
+    ring = F.coalesce(
+        F.get(F.from_json(polygon_json, _RINGS), 0),
+        F.array().cast(_RINGS.elementType),
+    )
+    first, last = F.get(ring, 0), F.get(ring, F.size(ring) - 1)
+    closed = F.when(first != last, F.concat(ring, F.array(first))).otherwise(ring)
+    return F.filter(closed, lambda p, i: i % POLYGON_SPACING == 0)
+
+
+def _rotation(roll: Column, pitch: Column, heading: Column) -> list[list[Column]]:
+    """R = Rz(heading) · Ry(pitch) · Rx(roll) expanded per element, the
+    layout of ``functions.geometry.orientation_rotation_matrix`` (and of
+    ``queries.geometry_q._sql_ray``)."""
+    sr, cr = F.sin(roll), F.cos(roll)
+    sp, cp = F.sin(pitch), F.cos(pitch)
+    sh, ch = F.sin(heading), F.cos(heading)
+    return [
+        [ch * cp, ch * sp * sr + sh * cr, ch * sp * cr - sh * sr],
+        [-sh * cp, -sh * sp * sr + ch * cr, -sh * sp * cr - ch * sr],
+        [-sp, cp * sr, cp * cr],
+    ]
+
+
+def _ray_polygon(joined: DataFrame) -> DataFrame:
+    """Add ``polygon_3d`` and ``origin``: ``functions.geometry.pixels_to_rays``
+    per row as Spark expressions (pixels truncated like the reference's
+    ``int()``)."""
+    r = _rotation(
+        F.radians(-F.col("roll_deg")),
+        F.radians(F.col("pitch_deg")),
+        F.radians(F.col("heading_deg") + 90.0),
+    )
+    rot = {f"_r{i}{j}": r[i][j] for i in range(3) for j in range(3)}
+    with_r = joined.select(
+        "*",
+        _sampled_ring(F.col("polygon_json")).alias("_pts"),
+        *(c.alias(name) for name, c in rot.items()),
+    )
+    w, h = F.col("image_width"), F.col("image_height")
+
+    def unit(p: Column) -> Column:
+        px = p[0].cast("long").cast("double")
+        py = p[1].cast("long").cast("double")
+        theta = F.lit(2 * math.pi) * (w - px) / w
+        phi = F.lit(math.pi) * py / h
+        return F.array(
+            F.sin(phi) * F.cos(theta), F.sin(phi) * F.sin(theta), F.cos(phi)
         )
-        rays = G.pixels_to_rays(
-            px,
-            py,
-            roll_rad=np.deg2rad(-row["roll_deg"]),
-            pitch_rad=np.deg2rad(row["pitch_deg"]),
-            heading_rad=np.deg2rad(row["heading_deg"] + 90.0),
-            origin=origin,
-            image_width=int(row["image_width"]),
-            image_height=int(row["image_height"]),
+
+    origin = [F.col("proj_x"), F.col("proj_y"), F.col("proj_z")]
+
+    def endpoint(v: Column) -> Column:
+        return F.array(
+            *(
+                F.col(f"_r{i}0") * v[0]
+                + F.col(f"_r{i}1") * v[1]
+                + F.col(f"_r{i}2") * v[2]
+                + origin[i]
+                for i in range(3)
+            )
         )
-        out_rows.append(
-            {
-                "file_name": row["file_name"],
-                "obj_idx": row["obj_idx"],
-                "bbox": row["bbox"],
-                "score": row["score"],
-                "class": row["class"],
-                "class_name": row["class_name"],
-                "polygon_3d": [list(r) for r in rays],
-                "origin": list(origin),
-            }
-        )
-    if not out_rows:
-        return pd.DataFrame({f.name: [] for f in _BEST_LINES_SCHEMA.fields})
-    return pd.DataFrame(out_rows)
+
+    return with_r.withColumns(
+        {
+            "polygon_3d": F.transform(F.transform("_pts", unit), endpoint),
+            "origin": F.array(*origin),
+        }
+    ).drop("_pts", *rot)
 
 
 def best_lines_3d(
@@ -216,8 +274,8 @@ def best_lines_3d(
             "image_height", F.lit(default_height)
         )
 
-    return joined.groupBy("file_name").applyInPandas(
-        _rays_one_photo, _BEST_LINES_SCHEMA
+    return _ray_polygon(joined).select(
+        *(F.col(f.name).cast(f.dataType) for f in _BEST_LINES_SCHEMA.fields)
     )
 
 
@@ -252,17 +310,19 @@ def point_and_mesh_intersection(
                 yield pdf
                 continue
             new_polys = []
-            for _, row in pdf.iterrows():
-                origin = np.asarray(row["origin"], dtype=np.float64)
-                pts = np.array([list(p) for p in row["polygon_3d"]], dtype=np.float64)
-                dirs = pts - origin[None, :]
+            for origin, poly in zip(pdf["origin"], pdf["polygon_3d"]):
+                origin = np.asarray(origin, dtype=np.float64)
+                pts = np.stack(poly).astype(np.float64)
                 hits = G.ray_triangle_intersections(
-                    np.repeat(origin[None, :], len(pts), axis=0), dirs, tri
+                    np.repeat(origin[None, :], len(pts), axis=0),
+                    pts - origin[None, :],
+                    tri,
                 )
-                merged = np.where(np.isnan(hits), pts, hits)
-                new_polys.append([list(p) for p in merged])
-            pdf = pdf.copy()
-            pdf["polygon_3d"] = new_polys
-            yield pdf
+                new_polys.append(np.where(np.isnan(hits), pts, hits).tolist())
+            yield pdf.assign(polygon_3d=new_polys)
 
-    return best_lines.mapInPandas(_intersect, schema)
+    return (
+        best_lines.repartition(_python_width(best_lines))
+        .mapInPandas(_intersect, schema)
+        .hint("rebalance")
+    )

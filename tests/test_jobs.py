@@ -100,6 +100,123 @@ class TestJobLayer:
             get_pipeline("no_such_pipeline")
 
 
+def _plan_nodes(plan):
+    """Every node of a physical plan, AQE query stages unwrapped."""
+    yield plan
+    if plan.nodeName().endswith("QueryStage"):
+        yield from _plan_nodes(plan.plan())
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _final_plan_nodes(df):
+    """Run ``df`` and return the nodes of its final (post-AQE) plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return list(_plan_nodes(plan))
+
+
+def _is_python_node(node) -> bool:
+    name = node.nodeName()
+    return any(k in name for k in ("Python", "Pandas", "InArrow"))
+
+
+class TestStreetLevelWidth:
+    """The street-level job's shape: rays in the JVM, the Python stages at
+    ``spark.sql.shuffle.partitions`` tasks, one landed file per stage."""
+
+    @pytest.fixture(scope="class")
+    def street_ctx(self, spark, job_fixtures):
+        return run_pipeline(
+            spark,
+            "street_level_grouping",
+            str(job_fixtures["tmp"] / "wh_width"),
+            {
+                "results_json_path": job_fixtures["results"],
+                "pose_csv_path": job_fixtures["pose"],
+                "mesh_triangles": _box_mesh(),
+            },
+        )
+
+    def test_best_lines_3d_has_no_python_node(self, spark, job_fixtures, street_ctx):
+        from hg_data_pipelines_spark.io import read_pose_csv
+        from hg_data_pipelines_spark.pipelines.street_level import best_lines_3d
+
+        best = best_lines_3d(
+            street_ctx.tables["grouped_detected_objects"],
+            read_pose_csv(spark, job_fixtures["pose"]),
+        )
+        nodes = _final_plan_nodes(best)
+        assert not [n.nodeName() for n in nodes if _is_python_node(n)]
+
+    def test_python_stages_run_at_shuffle_width(self, spark, job_fixtures, street_ctx):
+        from hg_data_pipelines_spark.io import read_results_json
+        from hg_data_pipelines_spark.pipelines.street_level import (
+            detected_with_idx,
+            grouped_detected_objects,
+            point_and_mesh_intersection,
+        )
+
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert width > 1
+        stages = {
+            "FlatMapGroupsInPandas": grouped_detected_objects(
+                detected_with_idx(read_results_json(spark, job_fixtures["results"]))
+            ),
+            "MapInPandas": point_and_mesh_intersection(
+                spark, street_ctx.tables["best_lines_3d"], _box_mesh()
+            ),
+        }
+        for name, df in stages.items():
+            py = [n for n in _final_plan_nodes(df) if _is_python_node(n)]
+            assert [n.nodeName() for n in py] == [name]
+            assert py[0].outputPartitioning().numPartitions() == width, name
+
+    def test_each_landed_table_is_one_file(self, street_ctx):
+        import os
+
+        for stage, rep in street_ctx.reports.items():
+            files = [f for f in os.listdir(rep["path"]) if f.endswith(".parquet")]
+            assert len(files) == 1, (stage, files)
+
+
+class TestReportRows:
+    """``Pipeline.run`` takes ``rows`` from an Observation on the write and
+    re-reads the landed table with the written schema."""
+
+    def test_empty_stage_reports_zero_rows(self, spark, tmp_path):
+        from hg_data_pipelines_spark.jobs import Pipeline, Stage
+
+        empty = Pipeline(
+            "empty_stage",
+            [Stage("nothing", lambda s, ctx: s.range(10).filter("id < 0"))],
+        )
+        ctx = empty.run(spark, str(tmp_path / "wh"))
+        assert ctx.reports["nothing"]["rows"] == 0
+        assert ctx.tables["nothing"].count() == 0
+
+    def test_partitioned_stage_rows_and_reread_schema(self, spark, tmp_path, sf_dir):
+        ctx = run_pipeline(
+            spark, "events_warehouse", str(tmp_path / "wh"), {"sf_dir": sf_dir}
+        )
+        rep = ctx.reports["events_fact"]
+        n = duckdb.connect().execute(
+            f"SELECT count(*) FROM read_parquet('{rep['path']}/**/*.parquet')"
+        ).fetchone()[0]
+        assert n > 0 and rep["rows"] == n
+        # the re-read's columns and types are what Parquet inference gives
+        inferred = spark.read.parquet(rep["path"]).schema
+        landed = ctx.tables["events_fact"].schema
+        assert [(f.name, f.dataType) for f in landed] == [
+            (f.name, f.dataType) for f in inferred
+        ]
+        assert landed.fieldNames()[-1] == "event_date"
+        assert rep["schema"] == inferred.simpleString()
+
+
 def _box_mesh_obj_text():
     """The _box_mesh() cube as OBJ text (quads; the parser fan-triangulates
     them into the same 12 triangles)."""

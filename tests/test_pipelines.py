@@ -235,6 +235,110 @@ class TestStreetLevelGrouping:
                 assert not np.allclose(p, origin)
 
 
+def _grouped_rows(spark, rows):
+    """Stage-1 shaped rows (file_name, obj_idx, polygon ring, group_idx)."""
+    from hg_data_pipelines_spark.pipelines.street_level import _GROUPED_SCHEMA
+
+    return spark.createDataFrame(
+        [
+            (f, i, [0.0, 0.0, 1.0, 1.0], json.dumps([ring]), 0.9, 1, "Window", g)
+            for f, i, ring, g in rows
+        ],
+        _GROUPED_SCHEMA,
+    )
+
+
+def _pose_rows(spark, poses):
+    from hg_data_pipelines_spark.schemas import POSE_REFERENCE
+
+    return spark.createDataFrame(
+        [(stem, *map(float, vals)) for stem, vals in poses.items()],
+        POSE_REFERENCE,
+    )
+
+
+def _expected_rays(ring, pose, width, height):
+    """The projection as numpy computes it: close the ring, stride it,
+    truncate the pixels, ``pixels_to_rays`` with the reference's pose
+    conventions (roll negated, heading + 90°)."""
+    roll, pitch, heading, ox, oy, oz = pose
+    if ring and ring[0] != ring[-1]:
+        ring = ring + [ring[0]]
+    pts = ring[::10]
+    if not pts:
+        return np.zeros((0, 3))
+    return G.pixels_to_rays(
+        np.array([int(p[0]) for p in pts], dtype=np.float64),
+        np.array([int(p[1]) for p in pts], dtype=np.float64),
+        roll_rad=np.deg2rad(-roll),
+        pitch_rad=np.deg2rad(pitch),
+        heading_rad=np.deg2rad(heading + 90.0),
+        origin=np.array([ox, oy, oz]),
+        image_width=width,
+        image_height=height,
+    )
+
+
+class TestNativeRays:
+    """``best_lines_3d`` projects in Spark expressions; the numpy kernel
+    ``functions.geometry.pixels_to_rays`` is the oracle."""
+
+    def test_matches_pixels_to_rays(self, spark):
+        rng = np.random.default_rng(2024)
+        dims, poses, rows, rings = {}, {}, [], {}
+        for p in range(40):
+            stem = f"pano_{p:03d}"
+            poses[stem] = (
+                *rng.uniform(-30.0, 30.0, 2),
+                rng.uniform(0.0, 360.0),
+                *rng.uniform(-5.0, 5.0, 3),
+            )
+            if p % 2:
+                dims[f"{stem}.jpg"] = (5376, 2688)
+            for k in range(3):
+                n = int(rng.integers(1, 35))  # many rings shorter than the stride
+                w, h = dims.get(f"{stem}.jpg", (8000, 4000))
+                ring = np.column_stack(
+                    [rng.uniform(-0.9, w, n), rng.uniform(-0.9, h, n)]
+                ).tolist()
+                if k == 2:
+                    ring.append(list(ring[0]))  # already closed
+                rings[(f"{stem}.jpg", k)] = ring
+                rows.append((f"{stem}.jpg", k, ring, k))
+        photo_dims = spark.createDataFrame(
+            [(f, w, h) for f, (w, h) in dims.items()],
+            "file_name string, image_width int, image_height int",
+        )
+        out = best_lines_3d(
+            _grouped_rows(spark, rows), _pose_rows(spark, poses), photo_dims
+        ).collect()
+        assert len(out) == len(rows)
+        for r in out:
+            f = r["file_name"]
+            pose = poses[f.split(".")[0]]
+            w, h = dims.get(f, (8000, 4000))
+            exp = _expected_rays(rings[(f, r["obj_idx"])], pose, w, h)
+            got = np.array(r["polygon_3d"], dtype=np.float64).reshape(-1, 3)
+            assert got.shape == exp.shape, (f, r["obj_idx"])
+            np.testing.assert_allclose(got, exp, rtol=1e-9, atol=1e-12)
+            assert list(r["origin"]) == list(pose[3:])
+
+    def test_empty_ring_yields_empty_polygon(self, spark):
+        grouped = _grouped_rows(
+            spark,
+            [("pano_0000.jpg", 0, [], 0), ("pano_0000.jpg", 1, _square(500, 800), 1)],
+        )
+        pose = _pose_rows(spark, {"pano_0000": (1.2, -0.8, 213.5, 10.0, 20.0, 3.0)})
+        best = best_lines_3d(grouped, pose)
+        by_idx = {r["obj_idx"]: r for r in best.collect()}
+        assert by_idx[0]["polygon_3d"] == []
+        assert len(by_idx[1]["polygon_3d"]) == 4
+        # stage 3's P7 filter (len > 1) drops the empty polygon
+        tris = np.array([[[0.0, 0.0, 100.0], [1.0, 0.0, 100.0], [0.0, 1.0, 100.0]]])
+        out = point_and_mesh_intersection(spark, best, tris).collect()
+        assert [r["obj_idx"] for r in out] == [1]
+
+
 class TestPhotoFanout:
     def test_theta_subdivisions(self):
         assert theta_subdivisions(20) == list(range(0, 360, 18))
